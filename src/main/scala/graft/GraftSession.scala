@@ -3,7 +3,8 @@ package graft
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core._
@@ -99,7 +100,9 @@ class GraftSession(val spark: SparkSession) {
     df.write.mode(SaveMode.Overwrite).parquet(dest)
     val oldPath = tablePaths.get(qn.toLowerCase)
     if (spark.catalog.tableExists(qn)) spark.sql(s"DROP TABLE IF EXISTS $qn")
-    spark.catalog.createTable(qn, dest)
+    // the entry takes the schema just written instead of re-inferring it
+    // from the parquet footers, which costs a Spark job per write
+    spark.catalog.createTable(qn, "parquet", df.schema, Map("path" -> dest))
     tablePaths(qn.toLowerCase) = dest
     oldPath.foreach(p => hadoopFs(new Path(p)).delete(new Path(p), true))
     registerTemp(table)
@@ -197,12 +200,10 @@ class GraftSession(val spark: SparkSession) {
     fmt match {
       case FileFormat.Csv =>
         // header + first `rows` data lines, inferred from that sample only
-        val lines = spark.read.textFile(first).limit(rows + 1)
         spark.read.option("header", "true").option("inferSchema", "true")
-          .options(resolved.options).csv(lines).schema
+          .options(resolved.options).csv(headLines(first, rows + 1)).schema
       case FileFormat.Ndjson =>
-        val lines = spark.read.textFile(first).limit(rows)
-        spark.read.options(resolved.options).json(lines).schema
+        spark.read.options(resolved.options).json(headLines(first, rows)).schema
       case FileFormat.Json =>
         // whole-document JSON: one document = one schema; row knob is moot
         spark.read.option("multiLine", "true").options(resolved.options).json(first).schema
@@ -210,6 +211,23 @@ class GraftSession(val spark: SparkSession) {
         // self-describing formats read the footer, not the data
         spark.read.format(fmt.sparkFormat).options(resolved.options).load(first).schema
     }
+  }
+
+  /** The first `n` lines of `file`, read on the driver the way Spark's
+    * text reader splits them (codec from the extension, LF/CR/CRLF line
+    * ends): sampling through a `limit` over the text reader costs several
+    * Spark jobs for a few kilobytes. */
+  private def headLines(file: String, n: Int): Dataset[String] = {
+    val p = new Path(file)
+    val codec = new CompressionCodecFactory(spark.sparkContext.hadoopConfiguration).getCodec(p)
+    val raw = hadoopFs(p).open(p)
+    val in = if (codec == null) raw else codec.createInputStream(raw)
+    val reader = new java.io.BufferedReader(
+      new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
+    val lines =
+      try Iterator.continually(reader.readLine()).takeWhile(_ != null).take(n).toVector
+      finally reader.close()
+    spark.createDataset(lines)(Encoders.STRING)
   }
 
   /** Read file(s) into a DataFrame. The reference's per-location smart_open

@@ -4,11 +4,14 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Data-quality checks (SURVEY §2.4 check_column / check_table), computed
-  * as **one single-pass aggregation** over the table — one job, one scan,
-  * map-side partial aggregation, no per-check queries. That is the
-  * scale-correct reshaping of the reference's per-check SQL
-  * (sql/operators/data_validations/check_column.py:13-211, pandas path
-  * 101-143; check_table.py:12-109).
+  * as **one single-pass aggregation** over the table — one scan, map-side
+  * partial aggregation, no per-check queries. Under AQE that one query is
+  * two Spark jobs: the shuffle-map job of the partial aggregate and the
+  * result job of the final one. `distinct_check`/`unique_check` (count
+  * distinct) add a second exchange on the checked column, and with it a
+  * third job. That is the scale-correct reshaping of the reference's
+  * per-check SQL (sql/operators/data_validations/check_column.py:13-211,
+  * pandas path 101-143; check_table.py:12-109).
   */
 object Checks {
 

@@ -1,7 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 
 /** Type-2 slowly-changing-dimension merge — the dimension-history ELT
   * pattern one step past the reference's merge surface
@@ -15,9 +17,9 @@ import org.apache.spark.sql.functions._
   * bookkeeping columns ([[ValidFrom]], [[ValidTo]], [[IsCurrent]]); the
   * source carries `keyCols ++ compareCols` with at most one row per key
   * and NON-NULL keys (duplicate or NULL source keys raise in-plan, the
-  * [[Merge.surfacingConflicts]] discipline — a NULL key would slip
-  * through every null-unsafe branch join and silently insert duplicate
-  * current rows). One batch application:
+  * [[Merge.surfacingConflicts]] discipline — a NULL key never matches
+  * the null-unsafe key join and would silently insert duplicate current
+  * rows). One batch application:
   *
   *   - key absent from the current state        → insert (from, null, true)
   *   - key present, any compareCol differs
@@ -29,23 +31,37 @@ import org.apache.spark.sql.functions._
   *   - dirty rows (is_current NULL)             → kept verbatim as
   *     history (never compared, closed, or dropped — row count is
   *     conserved on dirty bookkeeping)
+  *   - dirty duplicate current rows for a key   → all close when any of
+  *     them differs from the source row, and one new version is
+  *     inserted; all stay when every one matches it
   *
-  * 100 TB shape: one null-safe comparison join of the CURRENT slice
-  * against the batch on the dimension key (both sides shuffled by key —
-  * at warehouse scale the batch side usually broadcasts), one semi/anti
-  * fan-out of the decision, and a union — no windows, no global sorts,
-  * and history is never rewritten (an is_current/date-partitioned
-  * layout rewrites only the current partition). Every output value is a
-  * pure function of the inputs and the literal effective date, so the
-  * whole new state replays in an external engine — `op_scd2_merge`
-  * hash-matches the four-way decision against DuckDB. */
+  * 100 TB shape: history is one filtered scan, passed through untouched
+  * (an is_current/date-partitioned layout rewrites only the current
+  * partition). The CURRENT slice and the batch are each shuffled once by
+  * the dimension key; the per-key windows (duplicate-source count on the
+  * batch; rank and min/max attribute struct on the current slice) ride
+  * those shuffles, and ONE full outer join on the key, co-partitioned by
+  * them, decides every key: each joined row emits its kept or closed
+  * current row and/or the new version through
+  * `inline(filter(array(...)))`. No global sort, no second exchange.
+  * Every output value is a pure function of the inputs and the literal
+  * effective date, so the whole new state replays in an external
+  * engine — `op_scd2_merge` hash-matches the decision against DuckDB. */
 object Scd2 {
   val ValidFrom = "valid_from"
   val ValidTo = "valid_to"
   val IsCurrent = "is_current"
 
+  private val TgtHit = "__graft_t_hit"
+  private val TgtRank = "__graft_t_rank"
+  private val TgtLo = "__graft_t_lo"
+  private val TgtHi = "__graft_t_hi"
+  private val SrcHit = "__graft_s_hit"
+  private val SrcCount = "__graft_s_count"
+
   /** The new table state after applying `source` at `effectiveDate`.
-    * Lazy — validation (duplicate source keys) raises with the plan. */
+    * Lazy — validation (NULL or duplicate source keys) raises with the
+    * plan. */
   def scd2Plan(
       target: DataFrame,
       source: DataFrame,
@@ -61,8 +77,8 @@ object Scd2 {
     attrs.foreach(c => require(source.columns.exists(_.equalsIgnoreCase(c)),
       s"scd2 source must carry column $c"))
 
-    val validToType = target.schema(target.schema.fieldIndex(ValidTo)).dataType
-    val outCols = target.columns.toSeq
+    val outFields = target.schema.fields.toSeq
+    def isMeta(f: StructField, name: String) = f.name.equalsIgnoreCase(name)
 
     // A NULL is_current is dirty bookkeeping, not a version statement:
     // treat it as history (kept verbatim, never closed or compared) so
@@ -70,78 +86,68 @@ object Scd2 {
     // NULL in NEITHER branch and silently drop the row.
     val isCur = coalesce(col(IsCurrent), lit(false))
     val hist = target.where(!isCur)
-    val cur = target.where(isCur)
 
-    // in-plan duplicate-source-key guard, riding the first key column of
-    // the insert branch (the Merge raise_error discipline: survives
-    // column pruning because the union needs that column). NULL source
-    // keys are dirty input, not a key value: they would slip through
-    // every null-unsafe guard/branch join below (silently inserting
-    // duplicate "current" rows), so they raise in-plan first.
-    val nullKeyMsg =
-      s"merge(if_conflicts=scd2, keys=${keyCols.mkString(",")}): NULL source key"
-    val srcChecked = source.select(attrs.zipWithIndex.map { case (c, i) =>
-      if (i == 0)
-        when(keyCols.map(col(_).isNull).reduce(_ || _),
-          raise_error(lit(nullKeyMsg)).cast(source.schema(source.schema.fieldIndex(c)).dataType))
-          .otherwise(col(c)).as(c)
-      else col(c).as(c)
-    }: _*)
-    val dupKeys = srcChecked.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__n")).where(col("__n") > 1)
-      .select(keyCols.map(col): _*)
-    val srcP = srcChecked
-      .join(dupKeys.withColumn("__dup", lit(true)), keyCols, "left")
+    // Current slice, windowed per key on the shuffle the join reuses:
+    // the rank picks the one joined row that emits a changed key's new
+    // version, and the min/max attribute structs tell whether EVERY
+    // current row of the key (dirty duplicates included) matches the
+    // source row — min == max == source null-safely, field by field.
+    val byKey = Window.partitionBy(keyCols.map(col): _*).orderBy(keyCols.map(col): _*)
+    val wholeKey = byKey.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val attrStruct = struct(compareCols.zipWithIndex.map { case (c, i) => col(c).as(s"f$i") }: _*)
+    val cur = target.where(isCur).select(target.columns.map(col).toSeq ++ Seq(
+      lit(true).as(TgtHit),
+      row_number().over(byKey).as(TgtRank),
+      min(attrStruct).over(wholeKey).as(TgtLo),
+      max(attrStruct).over(wholeKey).as(TgtHi)): _*)
+    val src = source.select(attrs.map(col) ++ Seq(
+      lit(true).as(SrcHit),
+      count(lit(1)).over(Window.partitionBy(keyCols.map(col): _*)).as(SrcCount)): _*)
 
-    // keys whose incoming attributes differ (null-safely) from the
-    // current version
-    val diff = compareCols.map(c => !(col(s"t.$c") <=> col(s"s.$c"))).reduce(_ || _)
-    val keyEq = keyCols.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
-    val changedKeys = cur.alias("t").join(srcP.alias("s"), keyEq)
-      .where(diff)
-      .select(keyCols.map(k => col(s"t.$k").as(k)): _*)
+    val joined = cur.alias("t").join(src.alias("s"),
+      keyCols.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _), "full_outer")
+    val tHit = col(s"t.$TgtHit").isNotNull
+    val sHit = col(s"s.$SrcHit").isNotNull
+    val unchanged = compareCols.indices.map { i =>
+      val s = col(s"s.${compareCols(i)}")
+      (col(s"t.$TgtLo").getField(s"f$i") <=> s) && (col(s"t.$TgtHi").getField(s"f$i") <=> s)
+    }.reduce(_ && _)
+    val changed = tHit && sHit && !unchanged
 
-    // carries Merge's conflict marker so surfacingConflicts re-types the
-    // task failure as the MergeConflictException callers already handle
-    val guardMsg =
-      s"merge(if_conflicts=scd2, keys=${keyCols.mkString(",")}): duplicate source keys"
-    // wrap the first output column in the in-plan duplicate raise (the
-    // Merge raise_error discipline: survives column pruning because the
-    // union needs that column); `flag` marks a duplicated source key
-    def guarded(df: DataFrame, flag: String): DataFrame =
-      df.select(outCols.zipWithIndex.map { case (c, i) =>
-        val base = col(c).cast(target.schema(target.schema.fieldIndex(c)).dataType)
-        if (i == 0)
-          when(col(flag), raise_error(lit(guardMsg))
-            .cast(target.schema(target.schema.fieldIndex(c)).dataType))
-            .otherwise(base).as(c)
-        else base.as(c)
-      }: _*)
+    // the current row: kept, or closed at the effective date
+    val keptOrClosed = when(tHit, struct(outFields.map { f =>
+      val kept = col(s"t.${f.name}")
+      val v =
+        if (isMeta(f, ValidTo)) when(changed, effectiveDate.cast(f.dataType)).otherwise(kept)
+        else if (isMeta(f, IsCurrent)) when(changed, lit(false)).otherwise(kept)
+        else kept
+      v.as(f.name)
+    }: _*))
+    // the new version: a new key, or once per changed key
+    val newVersion = when(sHit && (!tHit || (changed && col(s"t.$TgtRank") === 1)),
+      struct(outFields.map { f =>
+        val v =
+          if (isMeta(f, ValidFrom)) effectiveDate
+          else if (isMeta(f, ValidTo)) lit(null)
+          else if (isMeta(f, IsCurrent)) lit(true)
+          else col(s"s.${f.name}")
+        v.cast(f.dataType).as(f.name)
+      }: _*))
 
-    val closed = cur.join(changedKeys, keyCols, "left_semi")
-      .withColumn(ValidTo, effectiveDate.cast(validToType))
-      .withColumn(IsCurrent, lit(false))
-    // Duplicate source rows whose attributes all match the current
-    // version traverse ONLY this branch (no diff → no new version, key
-    // present → no insert), so the kept-current rows carry the guard
-    // too — every duplicated source key now raises on some branch.
-    val keptCur = guarded(
-      cur.join(changedKeys, keyCols, "left_anti")
-        .join(dupKeys.withColumn("__dupk", lit(true)), keyCols, "left"),
-      "__dupk")
+    // In-plan source guards on the generator input, which every output
+    // row of the join needs, so no projection can prune them away; the
+    // messages carry Merge's conflict marker so surfacingConflicts
+    // re-types the task failure as the MergeConflictException callers
+    // already handle.
+    val keys = keyCols.mkString(",")
+    val rowsType = ArrayType(StructType(outFields.map(_.copy(nullable = true))))
+    val emitted = when(sHit && keyCols.map(k => col(s"s.$k").isNull).reduce(_ || _),
+        raise_error(lit(s"merge(if_conflicts=scd2, keys=$keys): NULL source key")).cast(rowsType))
+      .when(col(s"s.$SrcCount") > 1,
+        raise_error(lit(s"merge(if_conflicts=scd2, keys=$keys): duplicate source keys"))
+          .cast(rowsType))
+      .otherwise(filter(array(keptOrClosed, newVersion), _.isNotNull))
 
-    val newKeys = srcP.join(cur.select(keyCols.map(col): _*), keyCols, "left_anti")
-    val newVersions = srcP.join(changedKeys, keyCols, "left_semi")
-    val validFromType = target.schema(target.schema.fieldIndex(ValidFrom)).dataType
-    val inserts = guarded(
-      newKeys.unionByName(newVersions)
-        .withColumn(ValidFrom, effectiveDate.cast(validFromType))
-        .withColumn(ValidTo, lit(null).cast(validToType))
-        .withColumn(IsCurrent, lit(true)),
-      "__dup")
-
-    hist.unionByName(keptCur).unionByName(closed)
-      .unionByName(inserts)
-      .select(outCols.map(col): _*)
+    hist.unionByName(joined.select(inline(emitted)))
   }
 }

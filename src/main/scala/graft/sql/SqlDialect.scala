@@ -603,13 +603,25 @@ object SqlDialect {
     j
   }
 
+  /** Keywords that type the string literal after them (DATE '2024-01-01'
+    * — the form SqlTemplate binds a date or timestamp in): keyword and
+    * string are one operand. */
+  private val typedLiteralKeywords = Set("date", "timestamp", "timestamp_ntz",
+    "timestamp_ltz", "interval")
+
   /** Start index of the primary expression ENDING at `end` (inclusive):
-    * a single atom, a balanced (...) group, a function call name(...),
-    * an array subscript base[...] — then absorbing any qualified
-    * `<ident> .` chain to the left (t.col, db.schema.fn(x)). Used by
-    * the `::` and `~*` rewrites. */
+    * a single atom, a typed literal (DATE '...'), a balanced (...) group,
+    * a function call name(...), an array subscript base[...] — then
+    * absorbing any qualified `<ident> .` chain to the left (t.col,
+    * db.schema.fn(x)). Used by the `::` and `~*` rewrites. */
   private def primaryStart(ts: ArrayBuffer[Tok], end: Int): Int = {
     val base = ts(end) match {
+      case Str(_) =>
+        val p = prevIdx(ts, end)
+        ts.lift(p) match {
+          case Some(Word(w)) if typedLiteralKeywords.contains(w.toLowerCase) => p
+          case _ => end
+        }
       case Sym(")") =>
         val j = matchBack(ts, end, "(", ")")
         val p = prevIdx(ts, j)

@@ -103,4 +103,36 @@ class ApiSpec extends GraftSuite {
     g.dropTable(t)
     assert(!g.tableExists(t))
   }
+
+  test("the table swap keeps the catalog schema equal to the written parquet's") {
+    val t = TableRef("api_spec_types")
+    def location(t: TableRef): String =
+      spark.sql(s"DESCRIBE TABLE EXTENDED ${t.qualifiedName}").collect()
+        .find(_.getString(0) == "Location").get.getString(1)
+    def assertSameSchema(step: String): Unit =
+      assert(spark.table(t.qualifiedName).schema == spark.read.parquet(location(t)).schema, step)
+    val types =
+      """SELECT CAST(id AS BIGINT) AS l, CAST(id AS DECIMAL(12, 2)) AS dec,
+        |  DATE '2024-01-01' AS d, TIMESTAMP '2024-01-01 10:00:00' AS ts, id % 2 = 0 AS b,
+        |  named_struct('x', id, 'y', array(id, id + 1)) AS st,
+        |  array(named_struct('k', 'a')) AS arr, map('k', id) AS m,
+        |  CAST(CAST(id AS STRING) AS VARCHAR(10)) AS vc
+        |FROM range(3)""".stripMargin
+    g.writeTable(spark.sql(types), t, IfExists.Replace)
+    assertSameSchema("writeTable")
+    g.transform(s"SELECT * FROM {{t}} WHERE l < 2", Map("t" -> t), Some(t))
+    assertSameSchema("transform")
+    val src = TableRef("api_spec_types_src")
+    g.writeTable(spark.sql(types.replace("range(3)", "range(1, 5)")), src, IfExists.Replace)
+    g.merge(src, t, Nil, Seq("l"), ConflictStrategy.Update)
+    assertSameSchema("merge")
+    // VARCHAR(10) stays a plain string: a later append carries no length check
+    assert(spark.table(t.qualifiedName).schema("vc").dataType == org.apache.spark.sql.types.StringType)
+    val long = TableRef("api_spec_types_long")
+    g.writeTable(spark.sql(types.replace("CAST(CAST(id AS STRING) AS VARCHAR(10))",
+      "repeat('x', 40)")), long, IfExists.Replace)
+    g.append(long, t)
+    assert(g.rowCount(t) == 8)
+    assert(spark.table(t.qualifiedName).where("length(vc) = 40").count() == 3)
+  }
 }

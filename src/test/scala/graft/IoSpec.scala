@@ -159,6 +159,42 @@ class IoSpec extends GraftSuite {
     assert(s("k").dataType.typeName == "integer")
   }
 
+  test("first-file sample matches the text-reader sample: gzip, short file, CRLF, BOM, NDJSON") {
+    val dir = tmp("graft_io_sample")
+    def write(name: String, text: String): String = {
+      val path = s"$dir/$name"
+      val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      if (name.endsWith(".gz")) {
+        val out = new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(path))
+        try out.write(bytes) finally out.close()
+      } else java.nio.file.Files.write(java.nio.file.Paths.get(path), bytes)
+      path
+    }
+    // the sample the text reader takes: the first `n` lines, inferred alone
+    def textReaderSample(file: String, n: Int) = spark.read.textFile(file).limit(n)
+    def csvSchema(lines: org.apache.spark.sql.Dataset[String]) =
+      spark.read.option("header", "true").option("inferSchema", "true").csv(lines).schema
+    // k turns fractional past row 15, so only a sample of <= 15 rows infers an integer
+    val rows = (1 to 30).map(i =>
+      s"${if (i > 15) s"$i.5" else i},${i * 0.5},2024-01-${"%02d".format(i)},t$i")
+    val cases = Seq(
+      write("a.csv.gz", ("k,x,d,s" +: rows).mkString("\n") + "\n") -> 10,
+      write("short.csv", "k,x\n1,2.5\n") -> 1000,
+      write("crlf.csv", ("k,x,d,s" +: rows).mkString("\r\n") + "\r\n") -> 5,
+      write("bom.csv", "\uFEFFk,x\n1,a\n") -> 1000)
+    cases.foreach { case (file, n) =>
+      val got = g.inferSchemaFromFirstFile(FileRef(file, Some(FileFormat.Csv)), rows = n)
+      assert(got == csvSchema(textReaderSample(file, n + 1)), file)
+    }
+    val gz = FileRef(s"$dir/a.csv.gz", Some(FileFormat.Csv))
+    assert(g.inferSchemaFromFirstFile(gz, rows = 10)("k").dataType.typeName == "integer")
+    assert(g.inferSchemaFromFirstFile(FileRef(s"$dir/short.csv")).map(_.name) == Seq("k", "x"))
+    val nd = write("a.ndjson", "\uFEFF" + (1 to 5).map(i =>
+      s"""{"k": $i, "v": {"a": ${if (i > 2) "1.5" else "1"}}}""").mkString("\r\n"))
+    assert(g.inferSchemaFromFirstFile(FileRef(nd), rows = 2) ==
+      spark.read.json(textReaderSample(nd, 2)).schema)
+  }
+
   test("includeFileName exposes METADATA$FILENAME analogue") {
     val dir = tmp("graft_io_meta")
     Seq((1, "a")).toDF("k", "s").write.mode("overwrite").option("header", "true")

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,6 +26,25 @@ object SparkTestBase {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Spark jobs (shuffle-map stages under AQE included) that `body`
+    * starts from the calling thread, counted by a listener that sees only
+    * this call's job group. */
+  def jobsDuring(body: => Unit): Int = {
+    val group = "graft-job-count-" + java.util.UUID.randomUUID()
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    try { body; ListenerBusAccess.drain(sc) }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    n.get
   }
 }
 

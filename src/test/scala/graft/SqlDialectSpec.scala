@@ -28,6 +28,24 @@ class SqlDialectSpec extends GraftSuite {
     assert(pg("SELECT '42'::int8") == "SELECT CAST('42' AS bigint)")
   }
 
+  test("a bound date or timestamp (typed literal) is one :: operand") {
+    // SqlTemplate binds java.sql.Date/Timestamp as DATE '...'/TIMESTAMP '...'
+    val sql = graft.sql.SqlTemplate.render(
+      "SELECT {{d}}::date AS d, {{ts}}::timestamp AS ts, DATE '2024-01-02'::text AS s",
+      Map("d" -> java.sql.Date.valueOf("2024-01-01"),
+        "ts" -> java.sql.Timestamp.valueOf("2024-01-01 12:30:00")))
+    for (dialect <- Seq("postgres", "redshift")) {
+      val out = toSparkSql(sql, dialect)
+      assert(out == "SELECT CAST(DATE '2024-01-01' AS date) AS d, " +
+        "CAST(TIMESTAMP '2024-01-01 12:30:00.0' AS timestamp) AS ts, " +
+        "CAST(DATE '2024-01-02' AS string) AS s", dialect)
+      val r = spark.sql(out).collect().head
+      assert(r.getDate(0) == java.sql.Date.valueOf("2024-01-01"), dialect)
+      assert(r.getTimestamp(1) == java.sql.Timestamp.valueOf("2024-01-01 12:30:00"), dialect)
+      assert(r.getString(2) == "2024-01-02", dialect)
+    }
+  }
+
   test("qualified and subscripted :: operands (t.col, db.s.fn(x), arr[i])") {
     // the ubiquitous table-aliased cast — must absorb the '.' chain
     assert(pg("SELECT t.col::int8 FROM t") == "SELECT CAST(t.col AS bigint) FROM t")
